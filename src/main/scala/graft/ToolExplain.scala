@@ -1,24 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan and warm timings for named
   * queries. Usage: ToolExplain <sfDir> <query> [query ...]
   * (Not part of the driver contract.) */
 object ToolExplain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val spark = SparkSession.builder().master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // Pinned at build time so the plan environment is identical whether a
-      // storage-partitioned query (scan_v2_spj/join_spj, which also set
-      // these at runtime for cold/test sessions) has run yet or not —
-      // ordering-independent plans across the sweep.
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     args.tail.foreach { name =>
       val fn = SparkEntry.queries(name)

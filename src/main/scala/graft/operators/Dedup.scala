@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Rnd.rnd
-import graft.{QDef, Tables => T}
+import graft.{QDef, Standing, Tables => T}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -331,75 +331,45 @@ object Dedup {
         col("b.sig_a").as("sig_a"), col("b.sig_b").as("sig_b"))
   }
 
-  /** Warm-once shared frames — the single-process stand-in for the STANDING
-    * artifacts a production deployment maintains on disk (the LSH signature
-    * index `dedup_index_probe` persists, the cluster assignment the keep
-    * list is served from). Verify/Bench warm them once per run so the six
-    * sharing queries probe the standing artifact instead of each
-    * re-deriving the tokenize→dict→shingle→minhash pipeline — exactly the
-    * at-scale cost model, where signatures are computed once per document
-    * ever, not once per query. Declared queries are UNCHANGED when cold:
-    * tests and single-query runs never warm, so plan pins and the
-    * DeterminismSpec partitioning flips exercise the full cold pipeline.
-    * State is keyed by session identity + fixture dir, so a stale frame
-    * cannot cross sessions or scales. */
-  private final case class Warm(s: SparkSession, dir: String,
-    bands: DataFrame, clusters: Option[DataFrame], shingles: DataFrame,
-    ids: Set[Int])
-  @volatile private var warm: Option[Warm] = None
+  private val StandingBands = "dedup.bands"
+  private val StandingShingles = "dedup.shingles"
+  private val StandingClusters = "dedup.clusters"
 
   /** Query names that consume a shared frame — harnesses warm only when one
     * of these is selected. */
   val sharedFamily: Set[String] = Set("dedup_minhash", "dedup_cluster",
     "dedup_keep", "dedup_ngram", "dedup_incremental", "dedup_index_probe",
     "dedup_index_maintain", "dedup_containment", "dedup_tuning",
-    "dedup_source_overlap")
+    "dedup_source_overlap", "dedup_autotune")
 
-  /** Materialize the shared frames (checkpointed) and return the RDD ids
-    * backing them: harness cache sweeps MUST exempt these ids, or the next
-    * query finds its checkpoint blocks gone. Warm order matters — bands
-    * first, so the cluster fixpoint itself rides the warm band frame. */
-  def warmShared(s: SparkSession, dir: String): Set[Int] = {
-    val before = s.sparkContext.getPersistentRDDs.keySet
-    val b = bandRows(s, dir).localCheckpoint()
-    val sh = shingles(s, dir).distinct().localCheckpoint()
-    warm = Some(Warm(s, dir, b, None, sh, Set.empty))
-    val cl = clusters(s, dir).localCheckpoint()
-    val ids = (s.sparkContext.getPersistentRDDs.keySet -- before).toSet
-    warm = Some(Warm(s, dir, b, Some(cl), sh, ids))
-    ids
+  /** Build the [[graft.Standing]] LSH band index, distinct shingle set and
+    * cluster assignment (checkpointed) for (s, dir). Warm order matters —
+    * bands first, so the cluster fixpoint itself rides the warm band
+    * frame. */
+  def warmShared(s: SparkSession, dir: String): Unit = {
+    Standing(StandingBands, s, dir)(bandRows(s, dir).localCheckpoint())
+    Standing(StandingShingles, s, dir)(
+      shingles(s, dir).distinct().localCheckpoint())
+    Standing(StandingClusters, s, dir)(clusters(s, dir).localCheckpoint())
   }
 
-  /** Drop the warm frames and return to the cold self-contained pipeline
-    * (test hygiene — the warm≡cold spec must not leak state to later
-    * suites). */
-  def clearWarm(): Unit = warm.foreach { w =>
-    val ids = w.ids
-    w.s.sparkContext.getPersistentRDDs
-      .filter { case (id, _) => ids(id) }
-      .values.foreach(_.unpersist(blocking = false))
-    warm = None
-  }
-
-  /** RDD ids currently backing the warm frames — harness cache sweeps
-    * consult this per sweep (the Similarity family warms some frames
-    * lazily mid-run, so sweeps read the CURRENT id set, not a snapshot). */
-  def warmKeepIds: Set[Int] = warm.map(_.ids).getOrElse(Set.empty)
-
-  private def warmOf(s: SparkSession, dir: String): Option[Warm] =
-    warm.filter(w => (w.s eq s) && w.dir == dir)
+  private def warmShingles(s: SparkSession, dir: String): Option[DataFrame] =
+    Standing.get[DataFrame](StandingShingles, s, dir)
 
   private def sharedBands(s: SparkSession, dir: String): DataFrame =
-    warmOf(s, dir).map(_.bands).getOrElse(bandRows(s, dir))
+    Standing.get[DataFrame](StandingBands, s, dir)
+      .getOrElse(bandRows(s, dir))
 
   /** Like [[sharedBands]] but checkpointed on the cold path too — for
     * `dedup_incremental`, whose two probe branches must share one
     * signature pass even cold. */
   private def sharedBandsCk(s: SparkSession, dir: String): DataFrame =
-    warmOf(s, dir).map(_.bands).getOrElse(bandRows(s, dir).localCheckpoint())
+    Standing.get[DataFrame](StandingBands, s, dir)
+      .getOrElse(bandRows(s, dir).localCheckpoint())
 
   private def sharedClusters(s: SparkSession, dir: String): DataFrame =
-    warmOf(s, dir).flatMap(_.clusters).getOrElse(clusters(s, dir))
+    Standing.get[DataFrame](StandingClusters, s, dir)
+      .getOrElse(clusters(s, dir))
 
   /** MinHash+LSH candidate pairs (d1 < d2) — the shared front half of
     * `dedup_minhash` (which emits the pairs) and `dedup_cluster` (which
@@ -732,7 +702,7 @@ object Dedup {
         // Cached: sizes and both legs of the intersection join reuse the
         // distinct shingle set (harness unpersists between queries; the
         // warm path substitutes the standing checkpointed set).
-        val sh = warmOf(s, dir).map(_.shingles)
+        val sh = warmShingles(s, dir)
           .getOrElse(shingles(s, dir).distinct().cache())
         val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
         val inter = candidatePairs(s, dir)
@@ -784,7 +754,7 @@ object Dedup {
     QDef(
       "dedup_containment",
       (s, dir) => {
-        val sh = warmOf(s, dir).map(_.shingles)
+        val sh = warmShingles(s, dir)
           .getOrElse(shingles(s, dir).distinct().cache())
         val rare = sh.groupBy("s").agg(count(lit(1)).as("nd"))
           .where(col("nd") >= 2L && col("nd") <= graft.GraftConfig.ContainDfCap)
@@ -879,7 +849,7 @@ object Dedup {
         // recompute of the whole tokenize→dict→shingle pipeline. The
         // (source, s) distinct is unchanged either way (source is a
         // function of doc_id).
-        val base = warmOf(s, dir).map(_.shingles)
+        val base = warmShingles(s, dir)
           .getOrElse(shingles(s, dir))
         val ss = base
           .join(T.documents(s, dir).select("doc_id", "source"), "doc_id")
@@ -1602,7 +1572,7 @@ object Dedup {
         // Warm path rides the standing distinct shingle set (same frame
         // dedup_ngram verifies from); cold recomputes it once for both the
         // signature pass and the exact-Jaccard pass below.
-        val shWarm = warmOf(s, dir).map(_.shingles)
+        val shWarm = warmShingles(s, dir)
           .getOrElse(shingles(s, dir).distinct().localCheckpoint())
         val sig = shWarm.groupBy("doc_id")
           .agg(minhashAgg(0), (1 until MinHashes).map(minhashAgg): _*)
@@ -1728,7 +1698,7 @@ object Dedup {
       "dedup_autotune",
       (s, dir) => {
         val floor = graft.GraftConfig.TuneRetentionFloorMicro
-        val shWarm = warmOf(s, dir).map(_.shingles)
+        val shWarm = warmShingles(s, dir)
           .getOrElse(shingles(s, dir).distinct().localCheckpoint())
         val sig = shWarm.groupBy("doc_id")
           .agg(minhashAgg(0), (1 until MinHashes).map(minhashAgg): _*)

@@ -375,12 +375,10 @@ class DeterminismSpec extends SparkSpec {
         // first use (sharedGraphTiers); without a clear between runs the
         // 7-partition pass would reuse tiers checkpointed under 1
         // partition and the flip would be vacuous for the index build.
-        graft.operators.Similarity.clearWarm()
-        graft.operators.Dedup.clearWarm()
+        Standing.clear()
         spark.conf.set(partitionsKey, "1")
         val a = fn(spark, sf).collect().map(_.toString).toSeq
-        graft.operators.Similarity.clearWarm()
-        graft.operators.Dedup.clearWarm()
+        Standing.clear()
         spark.conf.set(partitionsKey, "7")
         val b = fn(spark, sf).collect().map(_.toString).toSeq
         assert(a === b, s"$name diverges across partitioning")

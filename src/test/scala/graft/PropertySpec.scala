@@ -84,6 +84,30 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("graph-ANN entry law: the cell and descent lanes score every shared " +
+    "(probe, vec) key bit-identically") {
+    import graft.operators.Similarity
+    val t = Similarity.sharedGraphTiers(spark, sf)
+    val co = Similarity.corpus(spark, sf)
+    // Corpus vectors that are not medoids: the declared probes ARE the
+    // fixture's medoids, whose own cell the descent never re-reads, so at
+    // this scale their lanes share no key.
+    val pr = co.where(col("vec_id").between(100L, 149L))
+      .select(col("vec_id").as("probe_id"), col("ce").as("pe"))
+    val (cell, descent) = Similarity.gannEntryLanes(pr, co,
+      Similarity.sharedAssigned(spark, sf), t.medoids.select("vec_id", "cell"),
+      t.hubs2, t.hubEdges)
+    val shared = cell.withColumnRenamed("raw", "rc")
+      .join(descent.withColumnRenamed("raw", "rd"), Seq("probe_id", "vec_id"))
+      .select("rc", "rd").as[(Double, Double)].collect()
+    assert(shared.nonEmpty, "the lanes share no key: the law is vacuous")
+    shared.foreach { case (rc, rd) =>
+      assert(java.lang.Double.doubleToRawLongBits(rc) ===
+        java.lang.Double.doubleToRawLongBits(rd),
+        s"lane scores $rc vs $rd: gannHubEntry's max no longer dedups exactly")
+    }
+  }
+
   test("minhash law: min-hash over a shingle subset ≥ min-hash over superset") {
     val rnd = new Random(5)
     (1 to 3).foreach { _ =>

@@ -1,38 +1,60 @@
 package graft
 
-/** The warm-shared dedup frames ([[graft.operators.Dedup.warmShared]] — the
-  * Verify/Bench standing-artifact path) must be a pure optimization: every
-  * sharing query's output is byte-identical warm vs cold. This is the spec
-  * behind the "semantics-free" claim the harnesses rely on; every OTHER
-  * suite runs cold (no warm call), so plan pins and determinism flips keep
-  * exercising the full self-contained pipeline.
+import java.nio.file.{Files, Paths}
+
+import graft.operators.Similarity
+
+/** Standing artifacts ([[Standing]] — the Verify/Bench path) must be a pure
+  * optimization: every consumer of every declared family returns identical
+  * output with its artifacts built up front by [[Standing.warm]] and cold
+  * after [[Standing.clear]] (where the graph tiers build lazily on first
+  * use). The tests are derived from [[Standing.families]], so a new family
+  * or consumer cannot escape them. Every OTHER suite runs cold, so plan pins
+  * and determinism flips keep exercising the self-contained pipeline.
   */
 class WarmSharedSpec extends SparkSpec {
-  test("warm standing frames change no sharing query's output") {
-    val names = graft.operators.Dedup.sharedFamily.toSeq.sorted
-    val cold = names.map(n =>
-      n -> SparkEntry.queries(n)(spark, sf).collect().map(_.toString).toSeq).toMap
-    val keep = graft.operators.Dedup.warmShared(spark, sf)
-    try {
-      assert(keep.nonEmpty, "warmShared registered no checkpointed frames")
-      names.foreach { n =>
-        val w = SparkEntry.queries(n)(spark, sf).collect().map(_.toString).toSeq
-        assert(w === cold(n), s"$n diverges under the warm standing frames")
-      }
-    } finally graft.operators.Dedup.clearWarm()
+  private def run(n: String): Seq[String] =
+    SparkEntry.queries(n)(spark, sf).collect().map(_.toString).toSeq
+
+  // Each consumer is compared once, under the first family that declares
+  // it; Standing.warm builds every family its picked names consume.
+  Standing.families.foldLeft(Set.empty[String]) { (compared, f) =>
+    test(s"warm ${f.name} frames change no sharing query's output") {
+      val names = (f.consumers -- compared).toSeq.sorted
+      Standing.clear()
+      val cold = names.map(n => n -> run(n)).toMap
+      Standing.clear()
+      try {
+        Standing.warm(names, spark, sf)
+        assert(Standing.keepIds.nonEmpty, "warm registered no checkpointed frames")
+        names.foreach { n =>
+          assert(run(n) === cold(n), s"$n diverges under the warm ${f.name} frames")
+        }
+      } finally Standing.clear()
+    }
+    compared ++ f.consumers
   }
 
-  test("warm IVF frames change no sharing query's output") {
-    val names = graft.operators.Similarity.sharedFamily.toSeq.sorted
-    val cold = names.map(n =>
-      n -> SparkEntry.queries(n)(spark, sf).collect().map(_.toString).toSeq).toMap
-    val keep = graft.operators.Similarity.warmShared(spark, sf)
+  test("replacing or clearing a standing artifact releases its blocks") {
+    Standing.clear()
+    // The same fixture under a second path: a different dir key.
+    val other = Files.createTempDirectory("standing").resolve("fixture")
+    Files.createSymbolicLink(other, Paths.get(sf).toAbsolutePath)
+    def persisted: Int = spark.sparkContext.getPersistentRDDs.size
+    val before = persisted
     try {
-      assert(keep.nonEmpty, "warmShared registered no checkpointed frames")
-      names.foreach { n =>
-        val w = SparkEntry.queries(n)(spark, sf).collect().map(_.toString).toSeq
-        assert(w === cold(n), s"$n diverges under the warm IVF frames")
-      }
-    } finally graft.operators.Similarity.clearWarm()
+      Similarity.warmShared(spark, sf)
+      val warmed = persisted
+      assert(warmed > before, "warmShared persisted nothing")
+      Similarity.warmShared(spark, sf)
+      assert(persisted === warmed, "re-warming the same dir kept a second copy")
+      Similarity.warmShared(spark, other.toString)
+      assert(persisted === warmed, "the replaced artifact's blocks were kept")
+    } finally {
+      Standing.clear()
+      Files.delete(other)
+      Files.delete(other.getParent)
+    }
+    assert(persisted === before, "clear() left standing blocks behind")
   }
 }
